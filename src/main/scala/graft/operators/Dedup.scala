@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.plans.Banks
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1196,15 +1198,8 @@ object Dedup {
   def simhashIndexBytes(n: Long, nChunks: Int): Long =
     n * 48L + nChunks.toLong * n * 24L
 
-  private val MaxCachedSimhashBanks = 2
-  // value None = duplicate corpus ids → scan-tier-INELIGIBLE, memoized
-  private val simhashBankCache = Similarity.boundedBroadcastCache[
-    Option[org.apache.spark.broadcast.Broadcast[graft.plans.SimhashIndexBank]]](
-    MaxCachedSimhashBanks)(v => v)
-  private[graft] def simhashBankCacheSize: Int =
-    simhashBankCache.synchronized(simhashBankCache.size())
-  private[graft] def clearSimhashBankCache(): Unit =
-    Similarity.clearBroadcastCache(simhashBankCache)(v => v)
+  private val simhashBanks =
+    Banks.cache[Option[Broadcast[graft.plans.SimhashIndexBank]]]("simhash", 2)
 
   /** Memoized broadcast simhash chunk index
     * ([[graft.plans.SimhashIndexBank]]) — keyed on the SOURCE frame's
@@ -1218,17 +1213,15 @@ object Dedup {
     */
   private def simhashBankFor(df: DataFrame, sets: DataFrame, cb: Int,
       maxBucketSize: Int)
-      : Option[org.apache.spark.broadcast.Broadcast[graft.plans.SimhashIndexBank]] = {
+      : Option[Broadcast[graft.plans.SimhashIndexBank]] = {
     val sc = sets.sparkSession.sparkContext
     // keyed on the DERIVED sets frame's semantic hash, not the source
     // df's: the sets plan encodes textCol/idCol/shingleLen, so two
     // calls on the same source with different columns or shingle
     // length cannot alias to one bank (r14 advice); the file signature
     // still covers data changes under an unchanged plan
-    val key = s"shb|${sc.applicationId}|${System.identityHashCode(sets.sparkSession)}|" +
-      s"${sets.queryExecution.analyzed.semanticHash()}|${CorpusStats.fileSignature(df)}|" +
-      s"$cb|$maxBucketSize"
-    Similarity.memoized(simhashBankCache, key) {
+    simhashBanks(Banks.key("shb", sc.applicationId, Banks.frameKey(sets, df),
+        cb, maxBucketSize)) {
       // null ids are filtered like the join tier's semantics (a null id
       // never survives `x.id < y.id` there); without the filter a null
       // would read as doc 0 via getLong and could emit spurious pairs
@@ -1237,11 +1230,8 @@ object Dedup {
         .filter(col("id").isNotNull && col("sim").isNotNull && col("sk").isNotNull)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toArray))
-      val seen = new java.util.HashSet[java.lang.Long](rows.length * 2)
-      val unique = rows.forall(r => seen.add(r._1))
-      if (unique)
-        Some(sc.broadcast(graft.plans.SimhashIndexBank(rows, cb, maxBucketSize)))
-      else None
+      Banks.whenUniqueIds(rows)(_._1)(
+        sc.broadcast(graft.plans.SimhashIndexBank(rows, cb, maxBucketSize)))
     }
   }
 
@@ -1291,14 +1281,14 @@ object Dedup {
           while (c < nch) {
             val shift = c * ncb
             val v0 = (xsim >>> shift) & msk
-            val r0 = b.bucketRange(c, v0)
+            val r0 = b.chunks(c).range(v0)
             // probe rows exist only for (id, chunk) pairs that survived
             // truncation in their OWN bucket
             if (xpos >= 0 && b.inBucket(c, r0, xpos)) {
               var pv = 0
               while (pv <= ncb) {
                 val r = if (pv == 0) r0
-                  else b.bucketRange(c, v0 ^ (1L << (pv - 1)))
+                  else b.chunks(c).range(v0 ^ (1L << (pv - 1)))
                 var m = (r >>> 32).toInt
                 val e = r.toInt
                 val posArr = b.chunkPos(c)
@@ -1408,14 +1398,8 @@ object Dedup {
   def winnowIndexBytes(keptOccurrences: Long, nDocs: Long): Long =
     keptOccurrences * 16L + nDocs * 24L
 
-  private val MaxCachedWinnowBanks = 2
-  private val winnowBankCache = Similarity.boundedBroadcastCache[
-    Option[org.apache.spark.broadcast.Broadcast[graft.plans.WinnowPairBank]]](
-    MaxCachedWinnowBanks)(v => v)
-  private[graft] def winnowBankCacheSize: Int =
-    winnowBankCache.synchronized(winnowBankCache.size())
-  private[graft] def clearWinnowBankCache(): Unit =
-    Similarity.clearBroadcastCache(winnowBankCache)(v => v)
+  private val winnowBanks =
+    Banks.cache[Option[Broadcast[graft.plans.WinnowPairBank]]]("winnow", 2)
 
   private def winnowScanPairs(df: DataFrame, idCol: String, inv: DataFrame,
       minShared: Int, maxIndexBroadcastBytes: Long): Option[DataFrame] = {
@@ -1431,9 +1415,7 @@ object Dedup {
     if (CorpusStats.rowCount(df.select(col(idCol)).distinct()) != nDocs)
       return None
     val sc = inv.sparkSession.sparkContext
-    val key = s"wb|${sc.applicationId}|${System.identityHashCode(inv.sparkSession)}|" +
-      s"${inv.queryExecution.analyzed.semanticHash()}|${CorpusStats.fileSignature(df)}"
-    val bankOpt = Similarity.memoized(winnowBankCache, key) {
+    val bankOpt = winnowBanks(Banks.key("wb", sc.applicationId, Banks.frameKey(inv, df))) {
       // explicit projection: a using-column join reorders columns to
       // put the key first, so a positional read would swap (id, fp).
       // null ids drop like the join tier (null fails x.id < y.id);
@@ -2114,17 +2096,11 @@ object Dedup {
     }
   }
 
-  private val MaxCachedEmbedBanks = 2
   // value None = duplicate corpus ids → scan-tier-INELIGIBLE (the
   // (bucketKey, salt) pipeline below keeps its own duplicate contract:
   // identical duplicate rows tolerated, conflicting ids fail fast)
-  private val embedBankCache = Similarity.boundedBroadcastCache[
-    Option[org.apache.spark.broadcast.Broadcast[graft.plans.EmbedIndexBank]]](
-    MaxCachedEmbedBanks)(v => v)
-  private[graft] def embedBankCacheSize: Int =
-    embedBankCache.synchronized(embedBankCache.size())
-  private[graft] def clearEmbedBankCache(): Unit =
-    Similarity.clearBroadcastCache(embedBankCache)(v => v)
+  private val embedBanks =
+    Banks.cache[Option[Broadcast[graft.plans.EmbedIndexBank]]]("embed", 2)
 
   /** The embedding near-dup candidate SCAN tier (r15 — see
     * [[graft.plans.EmbedIndexBank]]): distinct checkpoint-surviving
@@ -2156,10 +2132,8 @@ object Dedup {
     if (graft.plans.EmbedIndexBank.estimateBytes(n, words, bits, tabs) >
       maxBroadcastBytes) return None
     val sc = spark.sparkContext
-    val key = s"eb|${sc.applicationId}|${System.identityHashCode(spark)}|" +
-      s"${sig.queryExecution.analyzed.semanticHash()}|${CorpusStats.fileSignature(df)}|" +
-      s"$poolBits|$bits|$tabs|$maxBucketSize"
-    val bankOpt = Similarity.memoized(embedBankCache, key) {
+    val bankOpt = embedBanks(Banks.key("eb", sc.applicationId, Banks.frameKey(sig, df),
+        poolBits, bits, tabs, maxBucketSize)) {
       // null sketches (null vectors) never enter the exploded index
       // (explode of a null array drops the row), so they are excluded
       // here too; null ids are already dropped at the scratch
@@ -2167,13 +2141,8 @@ object Dedup {
         .filter(col("sk").isNotNull)
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-      val seen = new java.util.HashSet[java.lang.Long](rows.length * 2)
-      val unique = rows.forall(r => seen.add(r._1))
-      if (unique)
-        Some(sc.broadcast(graft.plans.EmbedIndexBank(
-          rows, poolBits, bits, tabs,
-          graft.plans.GraftFunctions.DefaultSeed, maxBucketSize)))
-      else None
+      Banks.whenUniqueIds(rows)(_._1)(sc.broadcast(graft.plans.EmbedIndexBank(
+        rows, poolBits, bits, tabs, graft.plans.GraftFunctions.DefaultSeed, maxBucketSize)))
     }
     if (bankOpt.isEmpty) return None
     val bank = bankOpt.get

@@ -1,14 +1,11 @@
 package graft.plans
 
 /** Broadcast per-table bucket directories for the embedding near-dup
-  * SCAN tier ([[graft.operators.Dedup.embeddingNearDupPairs]]) — the
-  * sixth incarnation of the budget-admitted broadcast-bank pattern
-  * (IVF → [[IvfIndexBank]], LSH → [[LshIndexBank]], simhash →
-  * [[SimhashIndexBank]], winnow → [[WinnowPairBank]], SemDeDup on the
-  * IVF bank). The r14 stage probe attributed ~6.6 s of the sf10
-  * `dd_embed_neardup_hi` median to shuffling + sorting the 35.4 M-row
-  * exploded (bucketKey, salt, id) index so bucket groups become
-  * contiguous; but candidate pairs are a pure function of bucket
+  * SCAN tier ([[graft.operators.Dedup.embeddingNearDupPairs]]),
+  * memoized through [[Banks]]. The r14 stage probe attributed ~6.6 s
+  * of the sf10 `dd_embed_neardup_hi` median to shuffling + sorting the
+  * 35.4 M-row exploded (bucketKey, salt, id) index so bucket groups
+  * become contiguous; but candidate pairs are a pure function of bucket
   * CO-MEMBERSHIP, and membership is itself a pure function of the
   * (id, sketch) rows this tier already collects for its id→sketch
   * bank — so the directories are built driver-side from that same

@@ -4,9 +4,10 @@ package graft.plans
   * ([[graft.operators.Similarity.ivfTopK]] /
   * `ivfSeededTopK`): every corpus row's (id, vector, norm) grouped by
   * its assigned list, members contiguous per list so a probe is one
-  * binary search + a tight linear scan. Built from the SAME
-  * [[NearestCentroidLists]] assignment the join tier computes, so the
-  * member set of each list is identical across tiers.
+  * binary search + a tight linear scan (the [[CsrDirectory]] `lists`,
+  * keyed by list id, ranges into the member arrays). Built from the
+  * SAME [[NearestCentroidLists]] assignment the join tier computes, so
+  * the member set of each list is identical across tiers.
   *
   * Vectors stay one `Array[Float]` per member (a flat members×dim
   * array was probed r12 and LOST ~40%: the JIT eliminates bounds
@@ -19,34 +20,18 @@ package graft.plans
   * Duplicate ids are kept as distinct member rows (not last-write-wins)
   * — the join tier scores every corpus ROW, so the bank must too.
   */
-case class IvfIndexBank(listIds: Array[Int], starts: Array[Int],
+case class IvfIndexBank(lists: CsrDirectory,
     ids: Array[Long], vecs: Array[Array[Float]], sqrtNorms: Array[Double])
-    extends Serializable {
-  /** [start, end) member range of `listId`; (0, 0) when absent. */
-  def listRange(listId: Int): Long = {
-    val p = java.util.Arrays.binarySearch(listIds, listId)
-    if (p < 0) 0L else (starts(p).toLong << 32) | (starts(p + 1).toLong & 0xffffffffL)
-  }
-}
+    extends Serializable
 
 object IvfIndexBank {
   /** Build from (list_id, id, vec) member rows, any order. */
   def apply(rows: Array[(Int, Long, Array[Float])]): IvfIndexBank = {
     val sorted = rows.sortBy(r => (r._1, r._2))
     val n = sorted.length
-    val distinctLists = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val starts = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var i = 0
-    while (i < n) {
-      if (distinctLists.isEmpty || distinctLists.last != sorted(i)._1) {
-        distinctLists += sorted(i)._1
-        starts += i
-      }
-      i += 1
-    }
-    starts += n
+    val (lists, _) = CsrDirectory.build(Array.range(0, n), i => sorted(i)._1.toLong)
     val sqrtNorms = new Array[Double](n)
-    i = 0
+    var i = 0
     while (i < n) {
       val v = sorted(i)._3
       var s = 0.0
@@ -55,7 +40,6 @@ object IvfIndexBank {
       sqrtNorms(i) = math.sqrt(s)
       i += 1
     }
-    IvfIndexBank(distinctLists.toArray, starts.toArray,
-      sorted.map(_._2), sorted.map(_._3), sqrtNorms)
+    IvfIndexBank(lists, sorted.map(_._2), sorted.map(_._3), sqrtNorms)
   }
 }

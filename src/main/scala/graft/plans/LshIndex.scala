@@ -2,10 +2,9 @@ package graft.plans
 
 /** Broadcast multi-table LSH index for the LSH scan tier
   * ([[graft.operators.Similarity.lshTopK]]): corpus vectors stored once
-  * (position-indexed), plus one CSR bucket directory per table —
-  * sorted distinct signatures, member-position ranges, flat position
-  * array — so a bucket probe is one binary search + a tight position
-  * scan, the same access shape as [[IvfIndexBank.listRange]].
+  * (position-indexed), plus one [[CsrDirectory]] per table — sorted
+  * distinct signatures, ranges into a flat position array — so a
+  * bucket probe is one binary search + a tight position scan.
   *
   * Signatures come from the SAME [[HyperplaneSig.of]] kernel the join
   * tier's `hyperplaneSignature` expression evaluates, so the bucket
@@ -16,18 +15,7 @@ package graft.plans
   */
 case class LshIndexBank(ids: Array[Long], vecs: Array[Array[Float]],
     sqrtNorms: Array[Double],
-    tableSigs: Array[Array[Long]], tableStarts: Array[Array[Int]],
-    tablePos: Array[Array[Int]]) extends Serializable {
-
-  /** [start, end) range into `tablePos(t)` of table `t`'s bucket with
-    * signature `sig`, packed (start << 32 | end); 0L when absent.
-    */
-  def bucketRange(t: Int, sig: Long): Long = {
-    val p = java.util.Arrays.binarySearch(tableSigs(t), sig)
-    if (p < 0) 0L
-    else (tableStarts(t)(p).toLong << 32) | (tableStarts(t)(p + 1).toLong & 0xffffffffL)
-  }
-}
+    tables: Array[CsrDirectory], tablePos: Array[Array[Int]]) extends Serializable
 
 object LshIndexBank {
   /** Build from (id, vec, per-table signatures) rows, any order.
@@ -48,28 +36,17 @@ object LshIndexBank {
       sqrtNorms(i) = math.sqrt(s)
       i += 1
     }
-    val tableSigs = new Array[Array[Long]](nTables)
-    val tableStarts = new Array[Array[Int]](nTables)
+    val tables = new Array[CsrDirectory](nTables)
     val tablePos = new Array[Array[Int]](nTables)
     var t = 0
     while (t < nTables) {
       // (sig, pos) sorted by sig then pos → CSR directory
       val order = Array.range(0, n).sortBy(p => (sorted(p)._3(t), p))
-      val sigs = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val starts = scala.collection.mutable.ArrayBuffer.empty[Int]
-      i = 0
-      while (i < n) {
-        val s = sorted(order(i))._3(t)
-        if (sigs.isEmpty || sigs.last != s) { sigs += s; starts += i }
-        i += 1
-      }
-      starts += n
-      tableSigs(t) = sigs.toArray
-      tableStarts(t) = starts.toArray
-      tablePos(t) = order
+      val (dir, pos) = CsrDirectory.build(order, p => sorted(p)._3(t))
+      tables(t) = dir
+      tablePos(t) = pos
       t += 1
     }
-    LshIndexBank(sorted.map(_._1), sorted.map(_._2), sqrtNorms,
-      tableSigs, tableStarts, tablePos)
+    LshIndexBank(sorted.map(_._1), sorted.map(_._2), sqrtNorms, tables, tablePos)
   }
 }

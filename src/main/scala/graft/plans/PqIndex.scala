@@ -18,39 +18,22 @@ package graft.plans
   * Codes are flat (member-major, m per member), 1-based like the
   * encode kernel emits them.
   */
-case class PqIndexBank(listIds: Array[Int], starts: Array[Int],
+case class PqIndexBank(lists: CsrDirectory,
     ids: Array[Long], codes: Array[Int], m: Int)
-    extends Serializable {
-  /** [start, end) member range of `listId`; (0, 0) when absent. */
-  def listRange(listId: Int): Long = {
-    val p = java.util.Arrays.binarySearch(listIds, listId)
-    if (p < 0) 0L else (starts(p).toLong << 32) | (starts(p + 1).toLong & 0xffffffffL)
-  }
-}
+    extends Serializable
 
 object PqIndexBank {
   /** Build from (list_id, id, codes) member rows, any order. */
   def apply(rows: Array[(Int, Long, Array[Int])], m: Int): PqIndexBank = {
     val sorted = rows.sortBy(r => (r._1, r._2))
     val n = sorted.length
-    val distinctLists = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val starts = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var i = 0
-    while (i < n) {
-      if (distinctLists.isEmpty || distinctLists.last != sorted(i)._1) {
-        distinctLists += sorted(i)._1
-        starts += i
-      }
-      i += 1
-    }
-    starts += n
+    val (lists, _) = CsrDirectory.build(Array.range(0, n), i => sorted(i)._1.toLong)
     val flat = new Array[Int](n * m)
-    i = 0
+    var i = 0
     while (i < n) {
       System.arraycopy(sorted(i)._3, 0, flat, i * m, m)
       i += 1
     }
-    PqIndexBank(distinctLists.toArray, starts.toArray,
-      sorted.map(_._2), flat, m)
+    PqIndexBank(lists, sorted.map(_._2), flat, m)
   }
 }

@@ -1,41 +1,27 @@
 package graft.plans
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Broadcast chunk-blocked simhash index for the simhash scan tier
-  * ([[graft.operators.Dedup.simhashNearDupPairs]]) — the fourth
-  * incarnation of the budget-admitted broadcast-bank pattern (IVF →
-  * [[IvfIndexBank]], LSH → [[LshIndexBank]], now the HmSearch chunk
-  * index). Members are position-indexed in id order; per 16/32-bit
-  * chunk a CSR bucket directory (sorted distinct chunk values,
-  * member-position ranges, flat position array) makes a probe one
+  * ([[graft.operators.Dedup.simhashNearDupPairs]]): the HmSearch chunk
+  * index, memoized through [[Banks]]. Members are position-indexed in
+  * id order; per 16/32-bit chunk a [[CsrDirectory]] (sorted distinct
+  * chunk values, ranges into a flat position array) makes a probe one
   * binary search + a tight position scan.
   *
   * Bucket TRUNCATION replays [[graft.operators.Skew.truncateHotKeys]]
   * exactly: within a (chunk, value) bucket the join tier keeps the
   * `maxBucketSize` smallest ids (`row_number` ordered by id). Here
-  * member positions ascend with id (the id sort above), and the CSR
+  * member positions ascend with id (the id sort below), and the CSR
   * build within a bucket orders by position, so keeping the FIRST
-  * `maxBucketSize` positions is the same set. Truncated-away members
-  * neither index nor probe in the join tier (probe rows derive from
-  * the truncated index frame), which the scan tier mirrors via
-  * [[inBucket]] on the member's own bucket.
+  * `maxBucketSize` positions (the directory's cap) is the same set.
+  * Truncated-away members neither index nor probe in the join tier
+  * (probe rows derive from the truncated index frame), which the scan
+  * tier mirrors via [[inBucket]] on the member's own bucket.
   */
 case class SimhashIndexBank(ids: Array[Long], sims: Array[Long],
     sk: Array[Long], chunkBits: Int,
-    chunkSigs: Array[Array[Long]], chunkStarts: Array[Array[Int]],
-    chunkPos: Array[Array[Int]]) extends Serializable {
+    chunks: Array[CsrDirectory], chunkPos: Array[Array[Int]]) extends Serializable {
 
-  def nChunks: Int = chunkSigs.length
-
-  /** [start, end) range into `chunkPos(c)` of chunk `c`'s bucket with
-    * value `v`, packed (start << 32 | end); 0L when absent.
-    */
-  def bucketRange(c: Int, v: Long): Long = {
-    val p = java.util.Arrays.binarySearch(chunkSigs(c), v)
-    if (p < 0) 0L
-    else (chunkStarts(c)(p).toLong << 32) | (chunkStarts(c)(p + 1).toLong & 0xffffffffL)
-  }
+  def nChunks: Int = chunks.length
 
   /** Whether member position `pos` survived truncation inside bucket
     * `range` of chunk `c` — positions within a bucket ascend, so this
@@ -71,8 +57,7 @@ object SimhashIndexBank {
       sk(4 * i + 2) = w(2); sk(4 * i + 3) = w(3)
       i += 1
     }
-    val chunkSigs = new Array[Array[Long]](nChunks)
-    val chunkStarts = new Array[Array[Int]](nChunks)
+    val chunks = new Array[CsrDirectory](nChunks)
     val chunkPos = new Array[Array[Int]](nChunks)
     var c = 0
     while (c < nChunks) {
@@ -81,23 +66,12 @@ object SimhashIndexBank {
       // bucket ascending pos ≡ ascending id, so truncation keeps the
       // smallest-id members, exactly like truncateHotKeys(ord = id)
       val order = Array.range(0, n).sortBy(p => ((sims(p) >>> shift) & mask, p))
-      val sigs = ArrayBuffer.empty[Long]
-      val starts = ArrayBuffer.empty[Int]
-      val pos = ArrayBuffer.empty[Int]
-      var inBkt = 0
-      i = 0
-      while (i < n) {
-        val v = (sims(order(i)) >>> shift) & mask
-        if (sigs.isEmpty || sigs.last != v) { sigs += v; starts += pos.length; inBkt = 0 }
-        if (inBkt < maxBucketSize) { pos += order(i); inBkt += 1 }
-        i += 1
-      }
-      starts += pos.length
-      chunkSigs(c) = sigs.toArray
-      chunkStarts(c) = starts.toArray
-      chunkPos(c) = pos.toArray
+      val (dir, pos) = CsrDirectory.build(order, p => (sims(p) >>> shift) & mask,
+        maxBucketSize)
+      chunks(c) = dir
+      chunkPos(c) = pos
       c += 1
     }
-    SimhashIndexBank(ids, sims, sk, chunkBits, chunkSigs, chunkStarts, chunkPos)
+    SimhashIndexBank(ids, sims, sk, chunkBits, chunks, chunkPos)
   }
 }

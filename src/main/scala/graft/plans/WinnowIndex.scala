@@ -1,11 +1,10 @@
 package graft.plans
 
 /** Broadcast inverted fingerprint index for the winnow-overlap scan
-  * tier ([[graft.operators.Dedup.winnowOverlapPairs]]) — the fifth
-  * incarnation of the budget-admitted broadcast-bank pattern (IVF,
-  * LSH, simhash chunks, SemDeDup cells). Holds the KEPT occurrences
-  * (doc-frequency ≤ cap, the same semi-joined frame the join tier
-  * self-joins) in both orientations:
+  * tier ([[graft.operators.Dedup.winnowOverlapPairs]]), memoized
+  * through [[Banks]]. Holds the KEPT occurrences (doc-frequency ≤ cap,
+  * the same semi-joined frame the join tier self-joins) in both
+  * orientations:
   *
   *  - per doc: the ordinals of its kept fingerprints (`docStart` /
   *    `docFpOrd`) — the probe side;

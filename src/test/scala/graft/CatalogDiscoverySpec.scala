@@ -153,9 +153,8 @@ class CatalogDiscoverySpec extends SparkSuite {
 
 class ConnectorConfigSpec extends SparkSuite {
 
-  private val refRoot = sys.env.getOrElse("SPARK_GRAFT_REF_DIR", "/root/reference")
-  private val refSource = s"$refRoot/connectors/sources/mariadb/live.json"
-  private val refSink = s"$refRoot/connectors/sinks/postgres/trading.json"
+  private val refSource = s"$refDir/connectors/sources/mariadb/live.json"
+  private val refSink = s"$refDir/connectors/sinks/postgres/trading.json"
 
   test("round-trip: the reference live source config loads to the hand-built chain") {
     // ScaleOpsSpec builds IncludeList -> Unwrap -> RenameIf(.*T_CARRIER,

@@ -82,10 +82,7 @@ class ConfigDrivenOrchestratorSpec extends SparkSuite {
 
   test("a deployed reference config stands up the whole table set end-to-end") {
     implicit val sqlCtx = spark.sqlContext
-    val refCfg = s"${sys.env.getOrElse("SPARK_GRAFT_REF_DIR", "/root/reference")}" +
-      "/connectors/sources/mariadb/live.json"
-    assume(new java.io.File(refCfg).exists, s"reference config not present: $refCfg")
-    val cfg = ConnectorConfig.load(refCfg)
+    val cfg = ConnectorConfig.load(s"$refDir/connectors/sources/mariadb/live.json")
     // catalog tier: a simple id PK per captured table (no MariaDB here)
     val (orch, metas) = CdcOrchestrator.fromConfig(spark, tmpDir("cfgorch"), cfg,
       t => Some(TableMeta(t, Seq("k"))))

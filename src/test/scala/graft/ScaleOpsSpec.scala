@@ -219,15 +219,14 @@ class ScaleOpsSpec extends SparkSuite {
   }
 
   test("survivor bank memo is CONTENT-keyed: survives a label-cache clear (r17)") {
-    import graft.operators.Similarity
+    import graft.plans.Banks
     QueriesExt.clearClusterLabelCache()
-    Similarity.clearIndexBankCache()
-    Similarity.clearBankCache()
+    Banks.clear()
     val first = QueriesExt.cuDedupSemantic(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(first.nonEmpty)
-    val banksAfterFirst = Similarity.indexBankCacheSize
-    val cbanksAfterFirst = Similarity.bankCacheSize
+    val banksAfterFirst = Banks.size("ivf")
+    val cbanksAfterFirst = Banks.size("centroid")
     assert(banksAfterFirst >= 1, "scan tier must have admitted a bank at sf0.001")
     // label churn: the labels recompute (new checkpoint identity) but the
     // survivor CONTENT is unchanged — the bank memo key must hit
@@ -235,9 +234,9 @@ class ScaleOpsSpec extends SparkSuite {
     val second = QueriesExt.cuDedupSemantic(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(second == first)
-    assert(Similarity.indexBankCacheSize == banksAfterFirst,
+    assert(Banks.size("ivf") == banksAfterFirst,
       "label-cache clear must NOT force a survivor index-bank rebuild")
-    assert(Similarity.bankCacheSize == cbanksAfterFirst,
+    assert(Banks.size("centroid") == cbanksAfterFirst,
       "label-cache clear must NOT force a survivor centroid-bank rebuild")
     QueriesExt.clearClusterLabelCache()
   }
