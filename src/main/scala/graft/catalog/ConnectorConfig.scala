@@ -45,7 +45,6 @@ final case class ConnectorConfig(name: String, config: Map[String, String]) {
 
   def topicPrefix: Option[String] = get("topic.prefix")
   def snapshotMode: Option[String] = get("snapshot.mode")
-  def topicsRegex: Option[String] = get("topics.regex")
   def insertMode: Option[String] = get("insert.mode")
   def schemaEvolution: Option[String] = get("schema.evolution")
   def heartbeatIntervalMs: Option[Long] = get("heartbeat.interval.ms").map(_.toLong)

@@ -58,18 +58,6 @@ object Conversions {
     regexp_replace(noCr, "\t", """\\t""")
   }
 
-  /** F9: timezone normalization — compare timestamps in UTC (reference:
-    * tests/validation.py:680-683; the session TZ is pinned UTC like the
-    * reference pins it, connectors/sources/mariadb/trading.json:52).
-    */
-  def toUtc(c: Column, fromTz: String): Column = to_utc_timestamp(c, fromTz)
-
-  /** F11: live-test marker value `CDC_TEST_<yyyyMMdd_HHmmss>` (reference:
-    * tests/test_cdc_live.py:170-174).
-    */
-  def cdcTestValue: Column =
-    concat(lit("CDC_TEST_"), date_format(current_timestamp(), "yyyyMMdd_HHmmss"))
-
   /** P8: lowercase all column names (reference: migrate_v3.py:396,590). */
   def lowercaseColumns(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     df.toDF(df.columns.toIndexedSeq.map(_.toLowerCase): _*)

@@ -123,43 +123,6 @@ object TextAnalysis {
   def winnowFingerprints(text: Column, k: Int = 8, w: Int = 4): Column =
     graft.plans.GraftFunctions.winnow(text, k, w)
 
-  // ------------------------------------------------------------------ PII
-
-  /** PII regexes, written in the Java∩RE2 common subset (ASCII \d and
-    * \b, char classes, bounded quantifiers — no backrefs or lookaround)
-    * so the SAME pattern string drives both the Spark plan and the
-    * DuckDB oracle SQL and the two can never drift.
-    */
-  val EmailPattern = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-  val PhonePattern = "\\+?\\d{3}[-. ]\\d{3}[-. ]\\d{4}"
-  val Ipv4Pattern = "\\b\\d{1,3}(?:\\.\\d{1,3}){3}\\b"
-
-  /** PII redaction: email → phone → IPv4, each replaced by a typed
-    * token. The order is part of the contract (an IPv4-shaped substring
-    * inside an email host must be consumed by the email pass first);
-    * the oracle SQL applies the identical chain. Pure codegen'd
-    * scan-side work — no shuffle, linear in corpus size.
-    */
-  def scrubPii(text: Column): Column =
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(text, lit(EmailPattern), lit("[EMAIL]")),
-        lit(PhonePattern), lit("[PHONE]")),
-      lit(Ipv4Pattern), lit("[IP]"))
-
-  // ------------------------------------------------------------------ URLs
-
-  /** URL and host extraction (http/https), same Java∩RE2 subset. */
-  val UrlPattern = "https?://[^\\s]+"
-  val UrlHostPattern = "https?://([^/\\s]+)"
-
-  /** All URLs in the text, as an array column. */
-  def urls(text: Column): Column =
-    regexp_extract_all(text, lit(UrlPattern), lit(0))
-
-  /** Host part of a single URL ('' when not URL-shaped). */
-  def urlHost(url: Column): Column = regexp_extract(url, UrlHostPattern, 1)
-
   /** Character shingles (n-grams) with stride, as an array column:
     * positions 1, 1+stride, ... each yielding substr(text, i, n). Stride
     * trades shingle density for cost; stride=1 is classic w-shingling.

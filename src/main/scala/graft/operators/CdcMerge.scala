@@ -39,8 +39,8 @@ object CdcMerge {
     * additionally carries `__op` and the ordering columns.
     *
     * Scale note: both sides shuffle on pkCols once (the anti-join and the
-    * union reuse it); with the bucketed table store (ParquetUpsertTable)
-    * only buckets present in the batch are rewritten.
+    * union reuse it); the bucketed table store (ParquetUpsertTable) runs
+    * it only on the buckets a merge compacts.
     */
   def applyChanges(current: DataFrame, changes: DataFrame, pkCols: Seq[String],
       orderCols: Seq[Column], batchRowsHint: Option[Long] = None): DataFrame = {
@@ -60,7 +60,7 @@ object CdcMerge {
     // bytes model uses the batch row count — an UPPER bound on the key
     // set, so a high-churn batch over-pins (safe direction: shuffle
     // instead of a too-big broadcast). Callers that already ran an
-    // action over the batch (ParquetUpsertTable's touched-bucket scan)
+    // action over the batch (ParquetUpsertTable's delta write)
     // pass the count as `batchRowsHint`; otherwise it comes from the
     // memoized CorpusStats.rowCount, so repeated merges of the same
     // frame (bench passes) pay the job once. Threshold < 0 means
@@ -85,11 +85,12 @@ object CdcMerge {
   }
 
   /** Split a change batch into keyable rows and NULL-PK violations — the
-    * shared boundary guard for BOTH keyed stores (ParquetUpsertTable,
-    * DeltaLogTable): a NULL key never matches itself in the merge
-    * anti-join, so an admitted NULL-PK row is an un-upsertable,
-    * un-deletable ghost that duplicates on every replay. Callers must
-    * make the second frame observable (side-output + count), not drop it.
+    * boundary guard of the keyed store (ParquetUpsertTable's seed path;
+    * its merge counts the same predicate inside the delta write): a NULL
+    * key never matches itself in the merge anti-join, so an admitted
+    * NULL-PK row is an un-upsertable, un-deletable ghost that duplicates
+    * on every replay. Callers must make the second frame observable
+    * (side-output + count), not drop it.
     *
     * Kept OUT of applyChanges itself: that operator's semantics are
     * pinned by the SQL oracle (s7), where NULL keys behave the same on

@@ -61,20 +61,6 @@ object Multimodal {
       sb.toString
     }
 
-    /** "Decode" a payload into nFeatures float features in [0, 1): each
-      * feature is a 16-bit slice of the [[featureBlocksHex]] entropy
-      * scaled by 2^-16 (a dyadic rational — exact in Float). Real impl:
-      * decode → resize → normalize → CNN/AST features.
-      */
-    def decodeFeatures(payload: Array[Byte], nFeatures: Int): Array[Float] = {
-      if (payload == null) return null
-      val hex = featureBlocksHex(payload, (nFeatures + 7) / 8)
-      Array.tabulate(nFeatures) { j =>
-        val off = 32 * (j / 8) + 4 * (j % 8)
-        Integer.parseInt(hex.substring(off, off + 4), 16) / 65536.0f
-      }
-    }
-
     /** "Resize": real impl rescales pixels; stub truncates/pads bytes. */
     def resize(payload: Array[Byte], targetBytes: Int): Array[Byte] =
       if (payload == null) null else java.util.Arrays.copyOf(payload, targetBytes)

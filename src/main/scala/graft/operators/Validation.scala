@@ -218,32 +218,6 @@ object Validation {
         lit(0L).as("sink_rows"), lit(false).as("covered")))
   }
 
-  /** A1 / check 2 — row-count smoke: WARN ≥ 0.1 %, FAIL ≥ 1 % drift
-    * (reference: tests/validation.py:336-397, thresholds :74-75).
-    */
-  def rowCountSmoke(source: DataFrame, sink: DataFrame,
-      warnPct: Double = 0.1, failPct: Double = 1.0): CheckResult = {
-    val s = source.count(); val k = sink.count()
-    val driftPct = if (s == 0) (if (k == 0) 0.0 else 100.0)
-      else math.abs(s - k) * 100.0 / s
-    val status = if (driftPct >= failPct) "FAIL" else if (driftPct >= warnPct) "WARN" else "PASS"
-    CheckResult("row_count_smoke", status, Map(
-      "source_rows" -> s.toString, "sink_rows" -> k.toString,
-      "drift_pct" -> f"$driftPct%.4f"))
-  }
-
-  /** A2 / check 3 — distinct-PK cardinality: sink>source ⇒ phantom rows,
-    * sink<source ⇒ data loss (reference: tests/validation.py:399-461).
-    */
-  def distinctPkCheck(source: DataFrame, sink: DataFrame, pkCols: Seq[String]): CheckResult = {
-    val s = source.agg(pkCountDistinct(pkCols).as("d")).head().getLong(0)
-    val k = sink.agg(pkCountDistinct(pkCols).as("d")).head().getLong(0)
-    val status = if (s == k) "PASS" else "FAIL"
-    val verdict = if (k > s) "phantom_rows" else if (k < s) "data_loss" else "ok"
-    CheckResult("distinct_pk_cardinality", status, Map(
-      "source_distinct" -> s.toString, "sink_distinct" -> k.toString, "verdict" -> verdict))
-  }
-
   /** A2 fast path for 100 TB — HLL pre-check before the exact scan
     * (SURVEY §7.4.5): cheap single-pass approx compare; only on
     * disagreement run the exact shuffle.
@@ -340,16 +314,6 @@ object Validation {
       "source_max_ts" -> fmtTs(sMax), "sink_max_ts" -> fmtTs(kMax),
       "lag_minutes" -> fmtLag(lagMin)))
   }
-
-  /** A6 / drift — timestamp range profile [min, max, count] for
-    * replay-window forensics (reference: tests/drift_analysis.py:227-280;
-    * "sink newer than source is impossible under CDC", :418-425).
-    */
-  def tsRangeProfile(df: DataFrame, tsCol: String): DataFrame =
-    df.agg(
-      min(col(tsCol)).cast("timestamp").as("min_ts"),
-      max(col(tsCol)).cast("timestamp").as("max_ts"),
-      count(lit(1)).cast("long").as("row_cnt"))
 
   /** A8 / check 7 (documented, unimplemented in the reference —
     * tests/README.md:24-27) — per-column NULL-ratio drift.

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.catalog.TableMeta
-import graft.operators.{CdcMerge, Envelope, ParquetUpsertTable}
+import graft.operators.{Envelope, ParquetUpsertTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -12,10 +12,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * deduplicated to latest-per-key (W1) and merged into a keyed
   * materialized table with upsert/delete semantics (S7/T3) inside
   * `foreachBatch`, with checkpointing supplying restart/replay safety
-  * (T9 — the merge is idempotent, so at-least-once redelivery is safe).
+  * (T9 — each merge passes the checkpoint location and batch id, and the
+  * store skips a redelivered batch it already committed).
   *
-  * Scale notes: each micro-batch shuffles once on the PK; the bucketed
-  * store rewrites only touched buckets; failed rows go to a DLQ side
+  * Scale notes: each micro-batch shuffles once on the PK and appends one
+  * delta epoch to the merge-on-read store; failed rows go to a DLQ side
   * output instead of failing the query (S10, reference:
   * connectors/sinks/postgres/performance.json:32-37).
   */
@@ -41,7 +42,8 @@ class CdcPipeline(spark: SparkSession, val meta: TableMeta, tablePath: String,
 
   private def mergeBatch(batch: DataFrame, batchId: Long): Unit = {
     val changes = transformBatch(batch)
-    try table.merge(changes, Seq(col("__source_ts_ms"), col("__seq")))
+    try table.merge(changes, Seq(col("__source_ts_ms"), col("__seq")),
+      batch = Some(ParquetUpsertTable.StreamBatch(checkpointPath, batchId)))
     catch {
       case e: Exception =>
         dlqPath match {

@@ -21,15 +21,6 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType
   */
 object ChangeEventSource {
 
-  /** JSON-envelope schema parser: value string → envelope columns
-    * (the `schemas.enable` JSON converter analog, reference:
-    * connectors/sources/mariadb/trading.json:68-71).
-    */
-  def parseJson(raw: DataFrame, rowSchema: StructType, valueCol: String = "value"): DataFrame = {
-    val env = Envelope.schemaFor(rowSchema)
-    raw.select(from_json(col(valueCol).cast("string"), env).as("e")).select("e.*")
-  }
-
   /** File-based envelope stream over a directory of JSON batches. */
   def jsonDir(spark: SparkSession, dir: String, rowSchema: StructType,
       maxFilesPerTrigger: Int = 16): DataFrame =

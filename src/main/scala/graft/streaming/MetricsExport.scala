@@ -96,10 +96,6 @@ object MetricsExport {
     Gauge(s"kafka_connect_task_${sanitize(metric)}",
       Seq("connector" -> connector, "task" -> task.toString), value)
 
-  /** metrics.yaml worker rule analog: `kafka_connect_worker_<metric>`. */
-  def workerGauge(metric: String, value: Double): Gauge =
-    Gauge(s"kafka_connect_worker_${sanitize(metric)}", Nil, value)
-
   /** The reference's task-status gauge renders RUNNING/PAUSED/FAILED as
     * a numeric gauge; same encoding here so dashboards can threshold.
     */

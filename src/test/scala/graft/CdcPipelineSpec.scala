@@ -52,6 +52,8 @@ class CdcPipelineSpec extends SparkSuite {
     q.stop()
     assert(pipe.table.read().as[RowKV].collect().sortBy(_.k).toSeq ==
       Seq(RowKV(1, "a2"), RowKV(3, "c")))
+    // each micro-batch commit records the stream's checkpoint and batch id
+    assert(pipe.table.committedBatch.exists(b => b.stream == s"$base/ckpt" && b.id >= 1))
   }
 
   test("heartbeat listener reports progress (T5)") {

@@ -1,8 +1,11 @@
 package graft
 
-import graft.operators.DeltaLogTable
+import graft.operators.ParquetUpsertTable
 import org.apache.spark.sql.functions._
 
+/** The merge-on-read side of the keyed store: each merge appends a
+  * delta, reads collapse base and deltas, and compaction folds them.
+  */
 class DeltaLogSpec extends SparkSuite {
   import spark.implicits._
 
@@ -12,7 +15,7 @@ class DeltaLogSpec extends SparkSuite {
   private val order = Seq(col("__source_ts_ms"), col("__seq"))
 
   test("append-only merge-on-read: upserts, deletes, cross-batch order") {
-    val t = new DeltaLogTable(spark, tmpDir("dlog") + "/t", Seq("k"))
+    val t = new ParquetUpsertTable(spark, tmpDir("dlog") + "/t", Seq("k"))
     t.merge(changes((1L, "a", "c", 1L), (2L, "b", "c", 1L)), order)
     assert(t.read().as[KV].collect().sortBy(_.k).toSeq == Seq(KV(1, "a"), KV(2, "b")))
     t.merge(changes((1L, "a2", "u", 2L), (3L, "c", "c", 2L)), order)
@@ -22,7 +25,7 @@ class DeltaLogSpec extends SparkSuite {
   }
 
   test("delete then re-insert resolves by delta order") {
-    val t = new DeltaLogTable(spark, tmpDir("dlog2") + "/t", Seq("k"))
+    val t = new ParquetUpsertTable(spark, tmpDir("dlog2") + "/t", Seq("k"))
     t.merge(changes((1L, "a", "c", 1L)), order)
     t.merge(changes((1L, "", "d", 2L)), order)
     t.merge(changes((1L, "reborn", "c", 3L)), order)
@@ -30,7 +33,7 @@ class DeltaLogSpec extends SparkSuite {
   }
 
   test("compaction folds deltas into base without changing the view") {
-    val t = new DeltaLogTable(spark, tmpDir("dlog3") + "/t", Seq("k"))
+    val t = new ParquetUpsertTable(spark, tmpDir("dlog3") + "/t", Seq("k"))
     t.merge(changes((1L, "a", "c", 1L), (2L, "b", "c", 1L)), order)
     t.merge(changes((1L, "a2", "u", 2L)), order)
     val before = t.read().as[KV].collect().sortBy(_.k).toSeq
@@ -43,7 +46,7 @@ class DeltaLogSpec extends SparkSuite {
   }
 
   test("auto-compaction triggers at the threshold") {
-    val t = new DeltaLogTable(spark, tmpDir("dlog4") + "/t", Seq("k"))
+    val t = new ParquetUpsertTable(spark, tmpDir("dlog4") + "/t", Seq("k"))
     t.merge(changes((1L, "a", "c", 1L)), order)
     (1 to 3).foreach(i => t.merge(changes((1L, s"v$i", "u", i + 1L)), order, maxDeltas = 3))
     assert(t.deltaCount == 0) // compacted at the 3rd delta
