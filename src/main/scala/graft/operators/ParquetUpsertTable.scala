@@ -26,7 +26,9 @@ import org.json4s.jackson.JsonMethods
   * bucket — it reads no base — and publishes a manifest appending that
   * epoch to each touched bucket's deltas. Reads let the newest layer
   * win per key (base < delta 1 < … < delta n; a delete marker drops the
-  * key); a bucket with no deltas is a plain scan of its base.
+  * key); a bucket with no deltas is a plain scan of its base. A bucket
+  * with deltas costs more to read: its layers are collapsed per key (a
+  * shuffle for a full read, one partition for a lookup).
   *
   * Compaction: a bucket that would reach `maxDeltas` deltas is instead
   * rewritten into a new base inside the same commit (base ∪ deltas
@@ -41,13 +43,15 @@ import org.json4s.jackson.JsonMethods
   * bucket, and each newer kept manifest adds one, so the data dir holds
   * at most `numBuckets * maxDeltas + KeptManifests - 1` epoch dirs.
   *
-  * Replay fence: a streaming merge passes its stream identity and batch
-  * id; the manifest records the last committed pair, and a redelivered
-  * batch at or below it costs one manifest read and changes nothing (the
-  * idempotent-sink recipe of Structured Streaming). That keeps appended
-  * deltas exactly-once, and keeps a replay from re-resolving same-ts_ms
-  * ties by a `__seq` that depends on partition layout. A new stream
-  * identity is never fenced.
+  * Replay fence: a streaming merge passes its stream identity (the
+  * query id) and batch id; the manifest records the last committed pair,
+  * and a redelivered batch at or below it costs one manifest read and
+  * changes nothing (the idempotent-sink recipe of Structured Streaming).
+  * That keeps appended deltas exactly-once, and keeps a replay from
+  * re-resolving same-ts_ms ties by a `__seq` that depends on partition
+  * layout. A new stream identity is never fenced. A stream batch's
+  * NULL-PK rows are quarantined under its id, so a replay before the
+  * commit replaces them instead of appending them twice.
   *
   * The manifest also records the table's current schema; reads apply it
   * explicitly, so after an additive evolution untouched buckets surface
@@ -213,19 +217,28 @@ class ParquetUpsertTable(
   /** Buckets without deltas are a plain scan of their bases; buckets
     * with deltas scan base and deltas together and keep the newest
     * layer per key (base rows carry no `__epoch`, so they sort last).
+    * `key` restricts the read to one key (a lookup).
     */
-  private def readBuckets(m: Manifest, buckets: Seq[Int]): DataFrame = {
+  private def readBuckets(m: Manifest, buckets: Seq[Int], key: Option[Column] = None): DataFrame = {
     def abs(rels: Seq[String]) = rels.map(rel => s"$path/$rel")
+    def keyed(d: DataFrame) = key.fold(d)(d.filter)
     val (layered, plain) = buckets.sorted.partition(m.deltas.contains)
     val baseDirs = abs(plain.flatMap(m.buckets.get))
     val plainScan =
-      if (baseDirs.isEmpty) None else Some(spark.read.schema(m.schema).parquet(baseDirs: _*))
+      if (baseDirs.isEmpty) None else Some(keyed(spark.read.schema(m.schema).parquet(baseDirs: _*)))
     val merged = if (layered.isEmpty) None else {
-      val dirs = abs(layered.flatMap(b => m.buckets.get(b).toSeq ++ m.deltas(b)))
-      val layers = spark.read
-        .schema(m.schema.add(OpCol, StringType).add(EpochCol, LongType))
-        .parquet(dirs: _*)
-      Some(CdcMerge.latestPerKey(layers, pkCols, Seq(col(EpochCol)))
+      // past this many paths Spark lists them with a distributed job,
+      // which costs more than reading a store's deltas, so layered dirs
+      // are scanned in groups below it
+      val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+      val layerSchema = m.schema.add(OpCol, StringType).add(EpochCol, LongType)
+      val layers = abs(layered.flatMap(b => m.buckets.get(b).toSeq ++ m.deltas(b)))
+        .grouped(threshold).map(dirs => spark.read.schema(layerSchema).parquet(dirs: _*))
+        .reduce(_ unionByName _)
+      // one key's layers are a few rows: in one partition the per-key
+      // window needs no shuffle
+      val rows = if (key.isEmpty) layers else keyed(layers).coalesce(1)
+      Some(CdcMerge.latestPerKey(rows, pkCols, Seq(col(EpochCol)))
         .filter(!(col(OpCol) <=> lit(Envelope.OpDelete)))
         .select(m.schema.fieldNames.toIndexedSeq.map(col): _*))
     }
@@ -238,9 +251,9 @@ class ParquetUpsertTable(
     * 1/numBuckets of the table regardless of size. Literals are cast to
     * the stored column types before hashing: `xxhash64(1: Int)` differs
     * from `xxhash64(1L)`, so an uncast literal of the "wrong" Scala type
-    * would land on the wrong bucket and silently return nothing. The key
-    * filter sits above the delta collapse; Catalyst pushes it below the
-    * per-key window into the scans.
+    * would land on the wrong bucket and silently return nothing. On a
+    * bucket with deltas the key filter sits below the per-key collapse,
+    * which then runs in one partition without a shuffle.
     */
   def lookup(pkValues: Map[String, Any]): DataFrame = {
     require(pkValues.keySet == pkCols.toSet, s"lookup needs all PK cols $pkCols")
@@ -250,9 +263,9 @@ class ParquetUpsertTable(
     val bucket = spark.range(1)
       .select(pmod(xxhash64(typed: _*), lit(numBuckets.toLong)).cast("int"))
       .head().getInt(0)
-    readBuckets(m, Seq(bucket)).filter(
+    readBuckets(m, Seq(bucket), Some(
       pkCols.map(c => col(c) === lit(pkValues(c)).cast(m.schema(c).dataType))
-        .reduce(_ && _))
+        .reduce(_ && _)))
   }
 
   /** Merge batches whose deltas no compaction has folded yet. */
@@ -272,7 +285,7 @@ class ParquetUpsertTable(
   private def seed(snapshot: DataFrame, batch: Option[StreamBatch]): Unit = {
     // a seeded NULL-PK row would be a PERMANENT ghost — no later merge
     // could update or delete it — so the seed path quarantines too
-    val keyedRows = quarantineNullPk(snapshot)
+    val keyedRows = quarantineNullPk(snapshot, batch)
     val prev = loadManifest()
     val version = prev.map(_.version + 1).getOrElse(0)
     val buckets = writeEpoch(keyedRows.withColumn(BucketCol, bucketExpr), version, append = false)
@@ -343,7 +356,7 @@ class ParquetUpsertTable(
         // NULL-PK events are violations, not keyable changes: NULL never
         // equals itself, so such a row could never be upserted or
         // deleted. They are quarantined (never silently dropped).
-        val rows = quarantineNullPk(changes)
+        val rows = quarantineNullPk(changes, batch)
         if (rows.isEmpty) return
         val latest = CdcMerge.latestPerKey(rows, pkCols, orderCols)
           .filter(col(OpCol) =!= Envelope.OpDelete)
@@ -360,11 +373,33 @@ class ParquetUpsertTable(
     * drop (alongside the P10/A3 checks on the SOURCE side); zero-ghost
     * snapshots cost one cheap isEmpty probe.
     */
-  private def quarantineNullPk(changes: DataFrame): DataFrame = {
+  private def quarantineNullPk(changes: DataFrame, batch: Option[StreamBatch]): DataFrame = {
     val (keyedRows, ghosts) = CdcMerge.splitKeyed(changes, pkCols)
-    if (!ghosts.isEmpty)
-      ghosts.write.mode("append").parquet(s"$path.nullpk")
+    if (!ghosts.isEmpty) quarantine(ghosts, batch)
     keyedRows
+  }
+
+  /** Write NULL-PK rows to the quarantine. A stream batch's rows are
+    * files named by its stream and batch id, which a redelivery of the
+    * batch replaces, so a batch replayed after a crash before its commit
+    * is quarantined once; other merges append.
+    */
+  private def quarantine(ghosts: DataFrame, batch: Option[StreamBatch]): Unit = batch match {
+    case None => ghosts.write.mode("append").parquet(s"$path.nullpk")
+    case Some(b) =>
+      val f = fs
+      val dir = new Path(s"$path.nullpk")
+      val name = s"batch-${b.stream.replaceAll("[^A-Za-z0-9_-]", "_")}-${b.id}-"
+      // a leading "_" hides the staging dir from readers of the quarantine
+      val staging = new Path(dir, s"_$name")
+      ghosts.write.mode("overwrite").parquet(staging.toString)
+      f.listStatus(dir).map(_.getPath).filter(_.getName.startsWith(name)).foreach(f.delete(_, false))
+      f.listStatus(staging).map(_.getPath).filter(_.getName.endsWith(".parquet")).zipWithIndex
+        .foreach { case (p, i) =>
+          val dest = new Path(dir, f"$name$i%05d.parquet")
+          if (!f.rename(p, dest)) sys.error(s"quarantine rename failed: $p -> $dest")
+        }
+      f.delete(staging, true)
   }
 
   /** NULL-PK rows quarantined by merge()/seed(), empty if none. */
@@ -397,8 +432,8 @@ class ParquetUpsertTable(
     val full = (0 until numBuckets).filter(b => m.deltas.getOrElse(b, Nil).size + 1 >= maxDeltas).toSet
     val bucketed = changes.withColumn(BucketCol, bucketExpr)
     // observed above the shuffle, which the filter cannot cross: AQE
-    // drops an empty shuffle stage's metrics, so only an empty batch
-    // observes nothing
+    // drops an empty shuffle stage's metrics, and Spark then completes
+    // the observation with no values, read below as an empty batch
     val stats = Observation()
     val observed = bucketed.repartition(col(BucketCol)).observe(stats,
       count(when(keyed, lit(1))).as("rows"),
@@ -413,9 +448,10 @@ class ParquetUpsertTable(
     val r = stats.get
     val touched = r.getOrElse("touched", Nil).asInstanceOf[Seq[Int]].toSet
     val rows = r.getOrElse("rows", 0L).asInstanceOf[Long]
-    if (r.getOrElse("nullpk", 0L).asInstanceOf[Long] > 0)
-      changes.filter(!keyed).write.mode("append").parquet(s"$path.nullpk")
-    if (touched.isEmpty) {
+    val nullPk = r.getOrElse("nullpk", 0L).asInstanceOf[Long]
+    if (nullPk > 0) quarantine(changes.filter(!keyed), batch)
+    // a batch of only NULL-PK rows still commits, to fence its id
+    if (touched.isEmpty && nullPk == 0) {
       fs.delete(new Path(path, epoch), true)
       return
     }
@@ -475,8 +511,8 @@ object ParquetUpsertTable {
   /** Deltas a bucket may reach before a merge rewrites it into a base. */
   val DefaultMaxDeltas = 16
 
-  /** A streaming micro-batch: the stream's identity (its checkpoint
-    * location) and its batch id.
+  /** A streaming micro-batch: the stream's identity (its persistent
+    * query id, new for every fresh checkpoint) and its batch id.
     */
   final case class StreamBatch(stream: String, id: Long)
 

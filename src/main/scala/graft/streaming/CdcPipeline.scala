@@ -12,8 +12,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * deduplicated to latest-per-key (W1) and merged into a keyed
   * materialized table with upsert/delete semantics (S7/T3) inside
   * `foreachBatch`, with checkpointing supplying restart/replay safety
-  * (T9 — each merge passes the checkpoint location and batch id, and the
-  * store skips a redelivered batch it already committed).
+  * (T9 — each merge passes the query id and batch id, and the store
+  * skips a redelivered batch it already committed).
   *
   * Scale notes: each micro-batch shuffles once on the PK and appends one
   * delta epoch to the merge-on-read store; failed rows go to a DLQ side
@@ -24,6 +24,9 @@ class CdcPipeline(spark: SparkSession, val meta: TableMeta, tablePath: String,
     checkpointPath: String, dlqPath: Option[String] = None, numBuckets: Int = 64) {
 
   val table = new ParquetUpsertTable(spark, tablePath, meta.pkCols, numBuckets)
+
+  /** Local property a streaming query sets on its micro-batch thread. */
+  private val QueryIdProperty = "sql.streaming.queryId"
 
   /** Transform one micro-batch of envelope rows into unwrapped, repaired
     * change rows carrying `__op`, `__source_ts_ms`, `__seq`.
@@ -42,8 +45,13 @@ class CdcPipeline(spark: SparkSession, val meta: TableMeta, tablePath: String,
 
   private def mergeBatch(batch: DataFrame, batchId: Long): Unit = {
     val changes = transformBatch(batch)
+    // the fence names the stream by its persistent query id, which the
+    // checkpoint stores: a restart from the same checkpoint keeps it, and
+    // a fresh checkpoint at the same path gets a new one, whose batch ids
+    // restart at 0 without being fenced by the old stream's
+    val queryId = spark.sparkContext.getLocalProperty(QueryIdProperty)
     try table.merge(changes, Seq(col("__source_ts_ms"), col("__seq")),
-      batch = Some(ParquetUpsertTable.StreamBatch(checkpointPath, batchId)))
+      batch = Option(queryId).map(ParquetUpsertTable.StreamBatch(_, batchId)))
     catch {
       case e: Exception =>
         dlqPath match {

@@ -52,8 +52,33 @@ class CdcPipelineSpec extends SparkSuite {
     q.stop()
     assert(pipe.table.read().as[RowKV].collect().sortBy(_.k).toSeq ==
       Seq(RowKV(1, "a2"), RowKV(3, "c")))
-    // each micro-batch commit records the stream's checkpoint and batch id
-    assert(pipe.table.committedBatch.exists(b => b.stream == s"$base/ckpt" && b.id >= 1))
+    // each micro-batch commit records the stream's query id and batch id
+    assert(pipe.table.committedBatch.exists(b => b.stream == q.id.toString && b.id >= 1))
+  }
+
+  test("a fresh checkpoint at the same path is not fenced by the old stream's batch ids") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = tmpDir("cdcrecheck")
+    val meta = TableMeta("t3", Seq("k"))
+    def run(events: Env*): java.util.UUID = {
+      val pipe = new CdcPipeline(spark, meta, s"$base/table", s"$base/ckpt", numBuckets = 4)
+      val stream = MemoryStream[Env]
+      val q = pipe.start(stream.toDF(), Trigger.ProcessingTime("100 milliseconds"))
+      events.foreach(e => { stream.addData(e); q.processAllAvailable() })
+      q.stop()
+      q.id
+    }
+    val first = run(env("c", 1, 1, "a"), env("c", 2, 2, "b"), env("u", 3, 1, "a2"))
+    // the operator drops the checkpoint and restarts at the same path:
+    // the new query's batch ids restart at 0, below the committed one
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$base/ckpt"))
+    val second = run(env("u", 4, 2, "b2"), env("c", 5, 3, "c"))
+    assert(first != second)
+    val table = new graft.operators.ParquetUpsertTable(spark, s"$base/table", Seq("k"), 4)
+    assert(table.read().as[RowKV].collect().sortBy(_.k).toSeq ==
+      Seq(RowKV(1, "a2"), RowKV(2, "b2"), RowKV(3, "c")))
+    assert(table.committedBatch == Some(
+      graft.operators.ParquetUpsertTable.StreamBatch(second.toString, 1)))
   }
 
   test("heartbeat listener reports progress (T5)") {

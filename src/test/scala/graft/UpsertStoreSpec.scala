@@ -123,6 +123,22 @@ class UpsertStoreSpec extends SparkSuite {
     assert(t.committedBatch == Some(StreamBatch("ckpt-b", 0)))
   }
 
+  test("an empty batch merged into a stored table returns without a commit") {
+    val path = tmpDir("empty") + "/t"
+    val t = new ParquetUpsertTable(spark, path, Seq("k"), numBuckets = 4)
+    t.seed(Seq(KV(1, "a")).toDS().toDF())
+    t.merge(changes((1L, "b", "u", 1L)), Seq(col("__source_ts_ms"), col("__seq")))
+    def manifests = new java.io.File(s"$path/_manifest").listFiles().map(_.getName).toSet
+    val before = manifests
+    // no rows reach the delta write, so it observes no metrics at all
+    val merged = scala.concurrent.Future(t.merge(changes(), Seq(col("__source_ts_ms"), col("__seq"))))(
+      scala.concurrent.ExecutionContext.global)
+    scala.concurrent.Await.result(merged, scala.concurrent.duration.Duration(120, "s"))
+    assert(manifests == before)
+    assert(new java.io.File(s"$path/data").listFiles().map(_.getName).sorted.toSeq == Seq("e00000", "e00001"))
+    assert(t.read().as[KV].collect().toSeq == Seq(KV(1, "b")))
+  }
+
   test("old snapshots are GC'd but the kept window preserves in-flight reads") {
     val path = tmpDir("gc") + "/t"
     val t = new ParquetUpsertTable(spark, path, Seq("k"), numBuckets = 4)
@@ -359,8 +375,19 @@ class UpsertStoreModelSpec extends SparkSuite {
     var model: Model = Map.empty
     var ts = 0L
     var crashes = 0
+    // NULL-PK rows: batch 2 carries only these (it touches no bucket),
+    // batch 7 carries one beside its keyed rows
+    def ghosts(n: Int, ts: Long) = (1 to n).map(i => (Option.empty[Long], s"ghost$i", "c", ts))
+      .toDF("k", "v", "__op", "__source_ts_ms").withColumn("__seq", monotonically_increasing_id())
+    val ghostBatches = Map(2 -> 2, 7 -> 1)
     for (batch <- 0 until 10) {
-      val (df, next, last) = randomBatch(rnd, model, ts, evolved = batch >= 5)
+      val (df, next, last) = batch match {
+        case 2 => (ghosts(2, ts + 1), model, ts + 1)
+        case 7 =>
+          val (keyedRows, next, last) = randomBatch(rnd, model, ts, evolved = true)
+          (keyedRows.unionByName(ghosts(1, last), allowMissingColumns = true), next, last)
+        case _ => randomBatch(rnd, model, ts, evolved = batch >= 5)
+      }
       val id = Some(StreamBatch(stream, batch.toLong))
       // the first attempt of every batch dies at `point` if it gets
       // there; the restarted store sees the same batch redelivered
@@ -393,6 +420,9 @@ class UpsertStoreModelSpec extends SparkSuite {
       assert(version(path) == v, s"batch $batch: redelivery committed")
       assertModel(t, model, batch)
       assert(t.committedBatch == id)
+      // every NULL-PK row is quarantined once, however often its batch ran
+      assert(t.nullPkQuarantine().count() == ghostBatches.collect { case (b, n) if b <= batch => n }.sum,
+        s"batch $batch: quarantine")
     }
     assert(crashes > 0, s"crash point $point never reached")
     assert(store(_ => ()).schemaHistory().map(_.fieldNames.toSeq) ==
